@@ -160,12 +160,24 @@ def cmd_snapshot(args) -> int:
 
 
 def cmd_compact(args) -> int:
-    """Small-file compaction (the OPTIMIZE maintenance op) for any parquet
-    target the incremental writers touch — run on a schedule or after a
-    burst of commits."""
+    """Small-file compaction (the OPTIMIZE maintenance op) — run on a
+    schedule or after a burst of commits. A manifest-pointer table (the
+    graph tables, the accession registry, streaming sinks) folds its
+    generations through `tx_compact` (bucket map) or `txlog_compact`
+    (segment log), which repoint the manifest atomically; `--target-mb`
+    and `--partition-by` apply only to plain parquet dirs."""
+    from gfe_db_spark.plans import txtable
     from gfe_db_spark.plans.compaction import compact_small_files
 
     spark = _spark("gfe-compact")
+    if txtable.is_manifest_table(spark, args.path):
+        m = txtable.read_manifest(spark, args.path)
+        if m is not None and "segments" in m:
+            gen = txtable.txlog_compact(spark, args.path)
+        else:
+            gen = txtable.tx_compact(spark, args.path)
+        print(f"manifest table compacted -> generation {gen}")
+        return 0
     stats = compact_small_files(
         spark,
         args.path,

@@ -1,15 +1,21 @@
 """Small-file compaction for parquet targets (the OPTIMIZE maintenance op).
 
-Every incremental writer in this engine — `partitioned_upsert` commits,
-streaming foreachBatch sinks, snapshot appends — adds files per commit, and
-at 100 TB the accumulated small files dominate scan cost: each file costs a
-task, an open, and a footer read, so a table written by 10k commits can
-spend more time scheduling than scanning. The reference never needs this
+Incremental writers add files per commit, and at 100 TB the accumulated
+small files dominate scan cost: each file costs a task, an open, and a
+footer read, so a table written by 10k commits can spend more time
+scheduling than scanning. The reference never needs this
 (its store compacts internally, ref ``neo4j.conf:24-34`` store tuning);
 on plain parquet it is the operator a user must run.
 
-Protocol (same crash-safety discipline as `plans/accession.py`'s registry
-compaction and `plans/merge.py`'s two-phase commit):
+This op is for plain parquet dirs (snapshot exports, query outputs,
+external data). Manifest-pointer tables (`plans/txtable.py`: the graph
+tables, the accession registry, streaming sinks) compact through
+`tx_compact` / `txlog_compact` instead, which fold generations and
+repoint the manifest atomically, so readers never observe a missing or
+mixed table; `compact_small_files` refuses them, because its rewrite
+flattens the generation dirs and drops `_manifests`.
+
+Protocol:
 
 1. list the target's data files via the Hadoop FS API (file://, hdfs://,
    s3a:// alike) — sizes only, no data read;
@@ -26,11 +32,9 @@ the only window where the target is missing — by promoting the completed
 staged dir; a staged dir *without* the marker is torn down as garbage.
 
 The swap in (4) is crash-safe but NOT reader-isolated: a reader scanning
-during the delete→rename window errors or sees nothing. For tables that
-need concurrent readers during maintenance, use the manifest-pointer
-layout (`plans/txtable.py`): `tx_compact` folds generations and repoints
-the manifest atomically, so readers never observe a missing or mixed
-table — old generations stay until `tx_vacuum`.
+during the delete→rename window errors or sees nothing. Tables that need
+concurrent readers during maintenance belong in the manifest-pointer
+layout.
 """
 
 from __future__ import annotations
@@ -91,13 +95,24 @@ def compact_small_files(
     per-bucket on the partitions a freshness watermark says changed, not
     table-wide; this function applied to one partition directory IS that
     incremental form.
+
+    Raises `ValueError` on a manifest-pointer table (see module
+    docstring): compact those with `tx_compact` / `txlog_compact`.
     """
+    from gfe_db_spark.plans.txtable import is_manifest_table
+
+    if is_manifest_table(spark, path):
+        raise ValueError(
+            f"{path} is a manifest-pointer table; compact it with "
+            "txtable.tx_compact / txlog_compact (a file-level rewrite would "
+            "drop its _manifests)"
+        )
     recover_compaction(spark, path)
     files = _list_data_files(spark, path)
     bytes_total = sum(sz for _, sz in files)
-    # mergeSchema ALWAYS: a schema-evolved target (partitioned_upsert with
-    # allow_schema_evolution) has files with differing schemas, and a
-    # plain read samples one footer — compacting through it would silently
+    # mergeSchema ALWAYS: a schema-evolved target (files appended with
+    # differing schemas) has no single footer schema, and a plain read
+    # samples one footer — compacting through it would silently
     # drop the evolved columns from old partitions. The footer-merge cost
     # is negligible next to the rewrite itself. Bonus: after compaction
     # every file carries the full schema, so plain reads work again.

@@ -60,34 +60,29 @@ class GraphTables:
 
     @staticmethod
     def load(spark: SparkSession, path: str) -> "GraphTables":
-        """Load the accumulated graph. Layout is auto-detected: a
-        `_graph_manifests` child marks the reader-isolated two-level
-        manifest layout (`upsert_graph(layout="tx")`) — ONE graph-manifest
-        read pins every table to the generation the same load committed,
-        so the snapshot is consistent ACROSS tables, not just within each
-        (a reader polling during a release load sees the whole graph
-        before the load or the whole graph after it, the isolation the
-        reference gets from Neo4j transactions, ref load.cyp:9). Without
-        it, the in-place bucketed layout (plans/merge.py) is read live."""
-        from gfe_db_spark.plans.merge import fs_exists, read_bucketed
-        from gfe_db_spark.plans.txtable import latest_numbered_json, tx_read
+        """Load the accumulated graph written by `upsert_graph`, or a plain
+        parquet export written by `save`. ONE graph-manifest read
+        (`_graph_manifests`) pins every table to the generation the same
+        load committed, so the snapshot is consistent ACROSS tables, not
+        just within each (a reader polling during a release load sees the
+        whole graph before the load or the whole graph after it, the
+        isolation the reference gets from Neo4j transactions, ref
+        load.cyp:9). Without a graph manifest, a table of flat part files
+        is a `save` export; any other table resolves at its latest
+        manifest (a first load that crashed before its graph-manifest
+        publish), and a table in the retired in-place ``__bucket=``
+        layout raises `ValueError` (`txtable.read_manifest`)."""
+        from gfe_db_spark.plans.txtable import _list_names, latest_numbered_json, tx_read
 
         _n, gdoc = latest_numbered_json(spark, _graph_manifest_dir(path))
-        if gdoc is not None:
-            return GraphTables(**{
-                f.name: tx_read(
-                    spark,
-                    os.path.join(path, f.name),
-                    generation=gdoc["tables"][f.name],
-                )
-                for f in fields(GraphTables)
-            })
 
         def load_one(name: str) -> DataFrame:
             tpath = os.path.join(path, name)
-            if fs_exists(spark, os.path.join(tpath, "_manifests")):
-                return tx_read(spark, tpath)
-            return read_bucketed(spark, tpath)
+            if gdoc is not None:
+                return tx_read(spark, tpath, generation=gdoc["tables"][name])
+            if any(n.endswith(".parquet") for n in _list_names(spark, tpath)):
+                return spark.read.parquet(tpath)
+            return tx_read(spark, tpath)
 
         return GraphTables(**{f.name: load_one(f.name) for f in fields(GraphTables)})
 
@@ -253,7 +248,6 @@ def upsert_graph(
     new: GraphTables,
     graph_path: str,
     n_buckets: int = 16,
-    layout: str = "tx",
 ) -> dict[str, list[int]]:
     """Commit one release's graph tables into the on-disk accumulated graph
     via the partition-pruned MERGE substrate: each table is hash-bucketed
@@ -262,68 +256,24 @@ def upsert_graph(
     Semantics per table = merge_graphs (same rules, disk-backed). Returns
     touched buckets per table.
 
-    `layout` picks the commit protocol, same merge semantics either way:
-    - ``"inplace"``: `plans/merge.partitioned_upsert` — dynamic
-      partition overwrite of the live dirs; cheapest, but a reader
-      scanning DURING the commit can see a half-swapped partition mix —
-      the documented opt-out for strictly single-reader deployments.
-    - ``"tx"`` (default since r7): `plans/txtable.tx_upsert` — each table is a
-      manifest-pointer table; a commit lands in a fresh generation dir
-      published by an atomic manifest rename. On top, ONE graph-level
-      manifest (``_graph_manifests/N.json``) is published AFTER all 11
-      table commits, pinning each table to the generation this load
-      produced — `GraphTables.load` resolves through it, so a polling
-      reader sees the whole graph before the load or the whole graph
-      after it, never release N's nodes with release N-1's edges (the
-      cross-table atomicity the reference gets from Neo4j transactions,
-      ref load.cyp:9 `apoc.periodic.iterate`)."""
-    from gfe_db_spark.plans.merge import partitioned_upsert
+    Each table is a manifest-pointer table (`plans/txtable.tx_upsert`): a
+    commit lands in a fresh generation dir published by an atomic
+    manifest rename. On top, ONE graph-level manifest
+    (``_graph_manifests/N.json``) is published AFTER all 11 table
+    commits, pinning each table to the generation this load produced —
+    `GraphTables.load` resolves through it, so a polling reader sees the
+    whole graph before the load or the whole graph after it, never
+    release N's nodes with release N-1's edges (the cross-table atomicity
+    the reference gets from Neo4j transactions, ref load.cyp:9
+    `apoc.periodic.iterate`). A graph in the retired in-place layout
+    makes the load raise `ValueError` (`txtable.read_manifest`), and no
+    graph manifest is published over it."""
     from gfe_db_spark.plans.txtable import (
         current_manifest_number,
         latest_numbered_json,
         publish_numbered_json,
         tx_upsert,
     )
-
-    if layout not in ("inplace", "tx"):
-        raise ValueError(f"unknown graph layout {layout!r}")
-    # layout-switch guard: committing with the WRONG layout against an
-    # existing graph silently loses data (tx sees an empty table and
-    # publishes a graph manifest hiding the bucketed dirs; inplace writes
-    # dirs the manifest-resolving reader never consults). Detect the
-    # other layout's artifacts and refuse.
-    from gfe_db_spark.plans.merge import fs_exists
-
-    spark = new.nodes_gfe.sparkSession
-    has_graph_manifest = fs_exists(spark, _graph_manifest_dir(graph_path))
-    probe = os.path.join(graph_path, "nodes_gfe")
-    # the inplace direction probes the per-table _manifests dir TOO (not
-    # just the graph manifest): a tx load that crashed after some table
-    # commits but before the first graph-manifest publish leaves
-    # _manifests dirs with no _graph_manifests — an inplace commit then
-    # would write bucketed dirs that tx-resolving readers (load_one
-    # detects _manifests) never consult, the exact silent loss this
-    # guard exists to prevent
-    if layout == "inplace" and (
-        has_graph_manifest or fs_exists(spark, os.path.join(probe, "_manifests"))
-    ):
-        raise ValueError(
-            f"graph at {graph_path} uses the tx (manifest-pointer) layout; "
-            "pass layout='tx' — an in-place commit would be invisible to "
-            "manifest-resolving readers"
-        )
-    if (
-        layout == "tx"
-        and not has_graph_manifest
-        and fs_exists(spark, probe)
-        and not fs_exists(spark, os.path.join(probe, "_manifests"))
-    ):
-        raise ValueError(
-            f"graph at {graph_path} uses the in-place bucketed layout; "
-            "pass layout='inplace' — a tx commit would start from an empty "
-            "table and hide the accumulated data"
-        )
-    do_upsert = tx_upsert if layout == "tx" else partitioned_upsert
 
     def releases_union(existing: DataFrame, batch: DataFrame) -> DataFrame:
         # __bucket = f(src, dst), so grouping by it alongside the keys is
@@ -343,10 +293,10 @@ def upsert_graph(
         keys, rule = MERGE_RULES[name]
         path = os.path.join(graph_path, name)
         if rule == "releases_union":
-            return name, do_upsert(
+            return name, tx_upsert(
                 df, path, keys, n_buckets=n_buckets, merge_fn=releases_union
             )
-        return name, do_upsert(df, path, keys, on_match=rule, n_buckets=n_buckets)
+        return name, tx_upsert(df, path, keys, on_match=rule, n_buckets=n_buckets)
 
     # the 11 table MERGEs are independent — run them as concurrent driver
     # jobs so the cluster pipelines them instead of paying 11 sequential
@@ -357,20 +307,19 @@ def upsert_graph(
     with ThreadPoolExecutor(max_workers=8) as pool:
         touched = dict(pool.map(commit_one, new.items()))
 
-    if layout == "tx":
-        # cross-table atomic publish: pin every table at the generation
-        # this load just committed; readers resolve the graph through
-        # this single pointer (see GraphTables.load)
-        spark = new.nodes_gfe.sparkSession
-        gens = {
-            name: current_manifest_number(spark, os.path.join(graph_path, name))
-            for name, _df in new.items()
-        }
-        gmdir = _graph_manifest_dir(graph_path)
-        n, _doc = latest_numbered_json(spark, gmdir)
-        publish_numbered_json(
-            spark, gmdir, (n or 0) + 1, {"generation": (n or 0) + 1, "tables": gens}
-        )
+    # cross-table atomic publish: pin every table at the generation this
+    # load just committed; readers resolve the graph through this single
+    # pointer (see GraphTables.load)
+    spark = new.nodes_gfe.sparkSession
+    gens = {
+        name: current_manifest_number(spark, os.path.join(graph_path, name))
+        for name, _df in new.items()
+    }
+    gmdir = _graph_manifest_dir(graph_path)
+    n, _doc = latest_numbered_json(spark, gmdir)
+    publish_numbered_json(
+        spark, gmdir, (n or 0) + 1, {"generation": (n or 0) + 1, "tables": gens}
+    )
     return touched
 
 
@@ -381,7 +330,7 @@ def vacuum_graph(
     keep_manifests: int = 2,
     grace_seconds: float | None = None,
 ) -> list[str]:
-    """Graph-aware vacuum for a tx-layout graph: the ONLY safe way to
+    """Graph-aware vacuum for an `upsert_graph` graph: the ONLY safe way to
     reclaim space under member tables, because the graph manifest pins
     each table to a FIXED generation — a per-table `tx_vacuum` with no
     pins can prune the very manifest a retained graph manifest still

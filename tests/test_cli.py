@@ -87,8 +87,8 @@ def test_cli_snapshot_roundtrip(spark, tmp_path, capsys):
     assert "v0001" in capsys.readouterr().out
     restored = tmp_path / "graph2"
     assert main(["snapshot", "restore", "--root", root, "--graph", str(restored)]) == 0
-    # the live graph is tx-layout by default since r7 (snapshot exports
-    # stay plain parquet) — read it layout-aware
+    # the live graph is manifest-pointer tables (snapshot exports stay
+    # plain parquet) — read it through the manifest
     from gfe_db_spark.plans.txtable import read_table
 
     a = read_table(spark, str(graph / "nodes_gfe"))

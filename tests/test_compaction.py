@@ -107,75 +107,87 @@ def test_recover_refuses_partial_staging_without_target(spark, tmp_path):
 
 
 def test_compaction_composes_with_bucketed_upsert(spark, tmp_path):
-    """Compacting a partitioned_upsert target must preserve the __bucket
-    directory layout and the n_buckets sidecar (it lives NEXT to the dir,
-    outside the swap), so subsequent commits keep pruning correctly."""
-    from pyspark.sql import functions as F
+    """Compacting a bucketed upsert target (CLI ``compact``, which routes a
+    manifest table to `tx_compact`) folds its generations into one while
+    keeping the __bucket layout and the recorded n_buckets, so subsequent
+    commits keep merging correctly and a changed bucket count still
+    raises."""
+    import os
 
-    from gfe_db_spark.plans.merge import partitioned_upsert, read_bucketed
+    from gfe_db_spark.__main__ import main
+    from gfe_db_spark.plans import txtable as TX
 
     target = str(tmp_path / "t")
     base = spark.range(500).selectExpr("id AS k", "id * 2 AS v")
-    partitioned_upsert(base, target, ["k"], n_buckets=4)
-    # upsert commits themselves keep ~1 file per touched bucket (the
-    # repartition in _write_bucketed — verified by the assert below), so
-    # fragment the target the way an external/legacy writer would: rewrite
-    # the same contents as 10 files per bucket, sidecar left in place
+    TX.tx_upsert(base, target, ["k"], n_buckets=4)
     for i in range(3):
         one = spark.createDataFrame([(i, -i)], "k long, v long")
-        partitioned_upsert(one, target, ["k"], n_buckets=4)
-    assert file_stats(spark, target).count() == 4, "upsert should not fragment"
-    frag = spark.read.parquet(target).repartition(10)
-    frag.write.partitionBy("__bucket").mode("overwrite").option(
-        "partitionOverwriteMode", "static"
-    ).parquet(target + ".tmp")
-    from gfe_db_spark.plans.merge import fs_delete, hadoop_fs
+        TX.tx_upsert(one, target, ["k"], n_buckets=4)
+    assert len(set(TX.read_manifest(spark, target)["buckets"].values())) > 1
 
-    fs, _ = hadoop_fs(spark, target)
-    HPath = spark._jvm.org.apache.hadoop.fs.Path
-    fs_delete(spark, target)
-    fs.rename(HPath(target + ".tmp"), HPath(target))
-    assert file_stats(spark, target).count() > 4
+    assert main(["compact", target]) == 0
+    m = TX.read_manifest(spark, target)
+    (gen,) = set(m["buckets"].values())
+    assert m["n_buckets"] == 4
+    assert sorted(d for d in os.listdir(f"{target}/{gen}") if d.startswith("__bucket=")) == [
+        f"__bucket={b}" for b in range(4)
+    ]
+    assert TX.tx_read(spark, target).count() == 500
 
-    stats = compact_small_files(
-        spark, target, target_bytes=10 * 1024 * 1024, partition_by=["__bucket"]
-    )
-    assert stats.files_after < stats.files_before
-    assert stats.rows == 500
-
-    # sidecar survived → the next commit still merges (a changed bucket
-    # count would raise; a lost sidecar would silently re-adopt)
-    import os
-
-    assert os.path.exists(target + ".n_buckets")
-    partitioned_upsert(
+    TX.tx_upsert(
         spark.createDataFrame([(42, 999)], "k long, v long"), target, ["k"], n_buckets=4
     )
-    out = read_bucketed(spark, target)
+    out = TX.tx_read(spark, target)
     assert out.count() == 500
     assert out.filter("k = 42").first().v == 999
     assert {r.v for r in out.filter("k < 3").collect()} == {0, -1, -2}
+    with pytest.raises(ValueError, match="bucket-count mismatch"):
+        TX.tx_upsert(base, target, ["k"], n_buckets=8)
+
+
+def test_compaction_refuses_manifest_tables(spark, tmp_path, capsys):
+    """`compact_small_files` on a manifest-pointer table would flatten its
+    generation dirs and drop `_manifests` — every snapshot gone. It must
+    refuse, leaving the table readable; the CLI routes both manifest
+    shapes (bucket map, segment log) to their own compaction instead."""
+    from gfe_db_spark.__main__ import main
+    from gfe_db_spark.plans import txtable as TX
+
+    table = str(tmp_path / "t")
+    TX.tx_upsert(spark.range(200).selectExpr("id AS k"), table, ["k"], n_buckets=4)
+    with pytest.raises(ValueError, match="manifest-pointer table"):
+        compact_small_files(spark, table, target_bytes=10 * 1024 * 1024)
+    assert TX.tx_read(spark, table).count() == 200
+    assert main(["compact", table]) == 0
+    assert "generation 2" in capsys.readouterr().out
+    assert TX.tx_read(spark, table).count() == 200
+
+    log = str(tmp_path / "log")
+    for i in range(3):
+        TX.txlog_append(spark.range(i * 10, i * 10 + 10), log)
+    with pytest.raises(ValueError, match="manifest-pointer table"):
+        compact_small_files(spark, log)
+    assert main(["compact", log]) == 0
+    assert TX.txlog_segment_count(spark, log) == 1
+    assert TX.read_table(spark, log).count() == 30
 
 
 def test_compaction_unifies_evolved_schema(spark, tmp_path):
-    """Compacting a schema-evolved MERGE target must read through
-    mergeSchema (a plain read samples one footer and would silently drop
-    the evolved column) and, as a side effect, rewrite every file with
-    the full schema so plain reads work again afterwards."""
-    from gfe_db_spark.plans.merge import partitioned_upsert, read_bucketed
-
+    """Compacting a dir whose files carry different schemas (a later append
+    added a column) must read through mergeSchema (a plain read samples
+    one footer and would silently drop the evolved column) and, as a side
+    effect, rewrite every file with the full schema so plain reads work
+    again afterwards."""
     target = str(tmp_path / "t")
     base = spark.createDataFrame([(i, "x") for i in range(100)], "k long, v string")
-    partitioned_upsert(base, target, ["k"], n_buckets=4)
-    widened = spark.createDataFrame([(1, "y", 7)], "k long, v string, extra long")
-    partitioned_upsert(widened, target, ["k"], n_buckets=4, allow_schema_evolution=True)
+    base.repartition(4).write.parquet(target)
+    widened = spark.createDataFrame([(100, "y", 7)], "k long, v string, extra long")
+    widened.write.mode("append").parquet(target)
 
-    stats = compact_small_files(
-        spark, target, target_bytes=10 * 1024 * 1024, partition_by=["__bucket"]
-    )
-    assert stats.rows == 100
+    stats = compact_small_files(spark, target, target_bytes=10 * 1024 * 1024)
+    assert stats.rows == 101
     # plain read (no mergeSchema) now sees the evolved column everywhere
-    out = read_bucketed(spark, target)
+    out = spark.read.parquet(target)
     assert "extra" in out.columns
-    got = {r.k: r.extra for r in out.filter("k <= 2").collect()}
-    assert got[1] == 7 and got[0] is None and got[2] is None
+    got = {r.k: r.extra for r in out.filter("k <= 1 OR k = 100").collect()}
+    assert got == {0: None, 1: None, 100: 7}

@@ -181,22 +181,38 @@ def test_copurchase_is_order_keyed_join(spark, specs):
     assert re.search(r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin", plan)
 
 
-def test_partitioned_upsert_scan_prunes_partitions(spark, tmp_path):
-    # The MERGE substrate's read of the existing target must show a
-    # partition filter on __bucket — the untouched-partition scan skip is
-    # the whole point of the design.
-    from pyspark.sql import functions as F
-
-    from gfe_db_spark.plans.merge import bucket_expr, partitioned_upsert
+def test_tx_upsert_existing_scan_prunes_buckets(spark, tmp_path, monkeypatch):
+    # The MERGE substrate's read of the existing target must be pruned to
+    # the batch's touched buckets — the untouched-bucket scan skip is the
+    # whole point of the design. tx_upsert prunes at PATH level (only the
+    # touched __bucket= dirs are handed to the scan), so the contract is
+    # on the scan's file index and the files it would read.
+    from gfe_db_spark.plans import txtable as TX
+    from gfe_db_spark.plans.merge import merge_clustered
 
     target = str(tmp_path / "t")
     base = spark.range(0, 512).selectExpr("id AS k", "id AS v")
-    partitioned_upsert(base, target, ["k"], n_buckets=8)
-    scan = spark.read.parquet(target).filter(F.col("__bucket").isin([3]))
-    plan = plan_of(scan)
-    assert re.search(r"PartitionFilters: \[[^\]]*__bucket", plan), plan[:600]
-    # and a non-partition filter would NOT prune: guard the distinction
-    assert scan.count() < 512
+    TX.tx_upsert(base, target, ["k"], n_buckets=8)
+
+    seen = []
+
+    def spy(existing, batch, *a, **kw):
+        seen.append(existing)
+        return merge_clustered(existing, batch, *a, **kw)
+
+    monkeypatch.setattr(TX, "merge_clustered", spy)
+    one = spark.createDataFrame([(42, -1)], "k long, v long")
+    (b,) = TX.tx_upsert(one, target, ["k"], n_buckets=8)
+    (existing,) = seen
+    plan = plan_of(existing)
+    locations = re.findall(r"Location: InMemoryFileIndex \[([^\]]*)\]", plan)
+    assert locations, plan[:800]
+    paths = [p.strip() for loc in locations for p in loc.split(",")]
+    assert paths and all(p.endswith(f"/__bucket={b}") for p in paths), paths
+    files = existing.inputFiles()
+    assert files and all(f"__bucket={b}/" in f for f in files)
+    # and the pruned read still feeds a correct merge
+    assert TX.tx_read(spark, target).count() == 512
 
 
 def test_ivf_index_probe_prunes_partitions(spark, tmp_path):
